@@ -93,26 +93,36 @@ class GraftTable private (val s: SparkSession, val root: String) {
 
   // ---- log resolution -------------------------------------------------
 
+  /** (committed versions, checkpoint versions) present in the log,
+    * each ascending, from ONE listing — a resolution that needs both
+    * sees one state of the log and pays one directory listing.
+    */
+  private def listLog(): (Seq[Long], Seq[Long]) =
+    if (!fs.exists(logDir)) (Seq.empty, Seq.empty)
+    else {
+      val names = fs.listStatus(logDir).toSeq.map(_.getPath.getName)
+      def versionsOf(prefix: String) = names.flatMap { n =>
+        if (n.startsWith(prefix) && n.endsWith(Suffix))
+          scala.util.Try(n.substring(prefix.length,
+            n.length - Suffix.length).toLong).toOption
+        else None
+      }.sorted
+      (versionsOf(VerPrefix), versionsOf(CkptPrefix))
+    }
+
+  /** The newest checkpoint ≤ v, and the commits in (checkpoint, v]
+    * that resolution applies on top of it.
+    */
+  private def logUpTo(v: Long): (Option[Long], Seq[Long]) = {
+    val (commits, ckpts) = listLog()
+    val base = ckpts.filter(_ <= v).lastOption
+    (base, commits.filter(x => x > base.getOrElse(0L) && x <= v))
+  }
+
   /** Committed versions present in the log, ascending. */
-  def versions(): Seq[Long] =
-    if (!fs.exists(logDir)) Seq.empty
-    else fs.listStatus(logDir).toSeq.map(_.getPath.getName).flatMap { n =>
-      if (n.startsWith(VerPrefix) && n.endsWith(Suffix))
-        scala.util.Try(n.substring(VerPrefix.length,
-          n.length - Suffix.length).toLong).toOption
-      else None
-    }.sorted
+  def versions(): Seq[Long] = listLog()._1
 
   def latestVersion: Long = versions().lastOption.getOrElse(0L)
-
-  private def checkpointVersions(): Seq[Long] =
-    if (!fs.exists(logDir)) Seq.empty
-    else fs.listStatus(logDir).toSeq.map(_.getPath.getName).flatMap { n =>
-      if (n.startsWith(CkptPrefix) && n.endsWith(Suffix))
-        scala.util.Try(n.substring(CkptPrefix.length,
-          n.length - Suffix.length).toLong).toOption
-      else None
-    }.sorted
 
   private def readLines(p: Path): Seq[String] = {
     val in = fs.open(p)
@@ -124,19 +134,17 @@ class GraftTable private (val s: SparkSession, val root: String) {
   private def commitPath(v: Long) = new Path(logDir, f"$VerPrefix$v%012d$Suffix")
   private def ckptPath(v: Long) = new Path(logDir, f"$CkptPrefix$v%012d$Suffix")
 
+  /** One parsed commit file. `meta` holds the metadata rows the
+    * commit wrote, encoded, by line tag (see [[GraftTable.MetaRows]]).
+    */
   private[graft] case class Commit(version: Long, action: String,
                                    adds: Seq[AddFile],
                                    removes: Seq[String],
                                    cdf: Seq[(String, Long)],
-                                   schemaJson: Option[String],
-                                   constraintsJson: Option[String],
+                                   meta: Map[String, String],
                                    tsMillis: Long,
-                                   dvs: Seq[(String, DvRef)] = Seq.empty,
-                                   bloomIdxJson: Option[String] = None,
-                                   colmapJson: Option[String] = None,
-                                   partMetaJson: Option[String] = None,
-                                   protocolJson: Option[String] = None,
-                                   info: Option[String] = None)
+                                   dvs: Seq[(String, DvRef)],
+                                   info: Option[String])
 
   /** Commit files and checkpoints are IMMUTABLE once published
     * (single-winner atomic publish; vacuum only ever deletes behind
@@ -286,12 +294,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     val rems = Seq.newBuilder[String]
     val cdfs = Seq.newBuilder[(String, Long)]
     val dvs = Seq.newBuilder[(String, DvRef)]
-    var schema: Option[String] = None
-    var constraints: Option[String] = None
-    var bloomIdx: Option[String] = None
-    var colmap: Option[String] = None
-    var partMeta: Option[String] = None
-    var protocol: Option[String] = None
+    val meta = Map.newBuilder[String, String]
     var info: Option[String] = None
     lines.tail.foreach { l =>
       val f = l.split("\t", 5)
@@ -303,19 +306,13 @@ class GraftTable private (val s: SparkSession, val root: String) {
         case "cdf"         => cdfs += ((f(1), f(2).toLong))
         case "dv"          => // dv \t dataRel \t dvRel \t bytes \t nDeleted
           dvs += ((f(1), DvRef(f(2), f(3).toLong, f(4).toLong)))
-        case "schema"      => schema = Some(l.split("\t", 2)(1))
-        case "constraints" => constraints = Some(l.split("\t", 2)(1))
-        case "bloomidx"    => bloomIdx = Some(l.split("\t", 2)(1))
-        case "colmap"      => colmap = Some(l.split("\t", 2)(1))
-        case "partmeta"    => partMeta = Some(l.split("\t", 2)(1))
-        case "protocol"    => protocol = Some(l.split("\t", 2)(1))
+        case tag if MetaTags(tag) => meta += tag -> l.split("\t", 2)(1)
         case "info"        => info = Some(l.split("\t", 2)(1))
         case other => sys.error(s"corrupt commit v$v: unknown action $other")
       }
     }
     Commit(ver.toLong, action, adds.result(), rems.result(), cdfs.result(),
-      schema, constraints, ts, dvs.result(), bloomIdx, colmap, partMeta,
-      protocol, info)
+      meta.result(), ts, dvs.result(), info)
   }
 
   /** The live (relpath → meta) set at version `v` — checkpoint ≤ v
@@ -324,24 +321,22 @@ class GraftTable private (val s: SparkSession, val root: String) {
     */
   private def resolveMeta(v: Long): Map[String, FileMeta] = {
     if (v <= 0) return Map.empty
-    val base = checkpointVersions().filter(_ <= v).lastOption
+    val (base, tail) = logUpTo(v)
     val start: Map[String, FileMeta] = base match {
       case None => Map.empty
       case Some(cv) => ckptFileMeta(cv) // sidecar-first, text fallback
     }
-    val from = base.getOrElse(0L)
-    versions().filter(x => x > from && x <= v)
-      .foldLeft(start) { (live, cv) =>
-        val c = readCommit(cv)
-        val applied = (live -- c.removes) ++
-          c.adds.map(a => a.path -> FileMeta(a.bytes, a.stats))
-        // dv actions attach to files still live after the fold above;
-        // a dv for a file this same commit removed is dropped with it
-        c.dvs.foldLeft(applied) { (m, d) =>
-          if (m.contains(d._1)) m.updated(d._1, m(d._1).copy(dv = Some(d._2)))
-          else m
-        }
+    tail.foldLeft(start) { (live, cv) =>
+      val c = readCommit(cv)
+      val applied = (live -- c.removes) ++
+        c.adds.map(a => a.path -> FileMeta(a.bytes, a.stats))
+      // dv actions attach to files still live after the fold above;
+      // a dv for a file this same commit removed is dropped with it
+      c.dvs.foldLeft(applied) { (m, d) =>
+        if (m.contains(d._1)) m.updated(d._1, m(d._1).copy(dv = Some(d._2)))
+        else m
       }
+    }
   }
 
   /** True when any live file of version `v` carries a deletion
@@ -356,46 +351,36 @@ class GraftTable private (val s: SparkSession, val root: String) {
   private def resolve(v: Long): Map[String, Long] =
     resolveMeta(v).view.mapValues(_.bytes).toMap
 
-  /** The recorded table schema at version `v` — the newest `schema`
-    * line in (checkpoint, v], else the checkpoint's. None on legacy
-    * logs that predate schema recording (readers fall back to parquet
-    * inference).
+  /** The value of metadata row `r` at version `v` — the newest line
+    * of its tag in (checkpoint, v], else the checkpoint's, else the
+    * row's empty value (legacy logs that predate the row). Commits
+    * re-record every non-empty row, so resolution never walks past a
+    * checkpoint.
     */
-  private[graft] def schemaAt(v: Long): Option[StructType] = {
-    if (v <= 0) return None
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val fromCommits = versions()
-      .filter(x => x > base.getOrElse(0L) && x <= v)
-      .reverseIterator
-      .flatMap(x => readCommit(x).schemaJson)
+  private def metaAt[T](r: MetaRow[T], v: Long): T = {
+    if (v <= 0) return r.empty
+    val (base, tail) = logUpTo(v)
+    val prefix = r.tag + "\t"
+    tail.reverseIterator.flatMap(x => readCommit(x).meta.get(r.tag))
       .nextOption()
-    fromCommits.orElse(base.flatMap { cv =>
-      ckptLines(cv).collectFirst {
-        case l if l.startsWith("schema\t") => l.split("\t", 2)(1)
-      }
-    }).map(j => DataType.fromJson(j).asInstanceOf[StructType])
+      .orElse(base.flatMap(cv => ckptLines(cv).collectFirst {
+        case l if l.startsWith(prefix) => l.substring(prefix.length)
+      }))
+      .fold(r.empty)(r.fromJson)
   }
 
-  /** The active CHECK constraints at version `v` (name → SQL
-    * expression), resolved exactly like the schema: newest
-    * `constraints` line in (checkpoint, v], else the checkpoint's,
-    * else empty (legacy logs). Every commit re-records the full
-    * active set, so resolution never walks past a checkpoint.
+  /** The recorded table schema at version `v`. None on legacy logs
+    * that predate schema recording (readers fall back to parquet
+    * inference).
     */
-  private[graft] def constraintsAt(v: Long): Seq[(String, String)] = {
-    if (v <= 0) return Seq.empty
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val fromCommits = versions()
-      .filter(x => x > base.getOrElse(0L) && x <= v)
-      .reverseIterator
-      .flatMap(x => readCommit(x).constraintsJson)
-      .nextOption()
-    fromCommits.orElse(base.flatMap { cv =>
-      ckptLines(cv).collectFirst {
-        case l if l.startsWith("constraints\t") => l.split("\t", 2)(1)
-      }
-    }).map(GraftTable.constraintsFromJson).getOrElse(Seq.empty)
-  }
+  private[graft] def schemaAt(v: Long): Option[StructType] =
+    metaAt(SchemaRow, v)
+
+  /** The active CHECK constraints at version `v` (name → SQL
+    * expression).
+    */
+  private[graft] def constraintsAt(v: Long): Seq[(String, String)] =
+    metaAt(ConstraintsRow, v)
 
   /** The active CHECK constraints (name → SQL expression). */
   def constraints(): Map[String, String] = constraintsAt(latestVersion).toMap
@@ -430,24 +415,9 @@ class GraftTable private (val s: SparkSession, val root: String) {
       constraints = Some(cur.filterNot(_._1 == name)))
   }
 
-  /** The active BLOOM FILTER INDEX at version `v` (column → numBits),
-    * resolved like schema/constraints: newest `bloomidx` line in
-    * (checkpoint, v], else the checkpoint's, else empty.
-    */
-  private[graft] def bloomIndexAt(v: Long): Seq[(String, Long)] = {
-    if (v <= 0) return Seq.empty
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val fromCommits = versions()
-      .filter(x => x > base.getOrElse(0L) && x <= v)
-      .reverseIterator
-      .flatMap(x => readCommit(x).bloomIdxJson)
-      .nextOption()
-    fromCommits.orElse(base.flatMap { cv =>
-      ckptLines(cv).collectFirst {
-        case l if l.startsWith("bloomidx\t") => l.split("\t", 2)(1)
-      }
-    }).map(GraftTable.bloomIdxFromJson).getOrElse(Seq.empty)
-  }
+  /** The active BLOOM FILTER INDEX at version `v` (column → numBits). */
+  private[graft] def bloomIndexAt(v: Long): Seq[(String, Long)] =
+    metaAt(BloomIdxRow, v)
 
   /** The active bloom filter index (column → numBits). */
   def bloomIndex(): Map[String, Long] = bloomIndexAt(latestVersion).toMap
@@ -464,20 +434,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
     * column of the same name can never resurrect the dropped data.
     * Empty mapping = identity (every pre-mapping table).
     */
-  private[graft] def colmapAt(v: Long): GraftTable.ColMap = {
-    if (v <= 0) return GraftTable.ColMap.empty
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val fromCommits = versions()
-      .filter(x => x > base.getOrElse(0L) && x <= v)
-      .reverseIterator
-      .flatMap(x => readCommit(x).colmapJson)
-      .nextOption()
-    fromCommits.orElse(base.flatMap { cv =>
-      ckptLines(cv).collectFirst {
-        case l if l.startsWith("colmap\t") => l.split("\t", 2)(1)
-      }
-    }).map(GraftTable.colmapFromJson).getOrElse(GraftTable.ColMap.empty)
-  }
+  private[graft] def colmapAt(v: Long): GraftTable.ColMap =
+    metaAt(ColMapRow, v)
 
   /** True when version `v` reads through a non-identity column
     * mapping — the READER-FEATURE gate twin of [[hasDvAsOf]]: paths
@@ -486,44 +444,18 @@ class GraftTable private (val s: SparkSession, val root: String) {
     */
   def hasColMapAsOf(v: Long): Boolean = !colmapAt(v).isIdentity
 
-  /** The recorded partition keys at `v` — the newest `partmeta`
-    * row in (checkpoint, v], else the checkpoint's (colmapAt's
-    * resolution). Ordered outermost directory first; empty on flat
-    * tables and legacy partitioned logs.
+  /** The recorded partition keys at `v`, ordered outermost
+    * directory first; empty on flat tables and legacy partitioned
+    * logs.
     */
-  private[graft] def partMetaAt(v: Long): Seq[GraftTable.PartMeta] = {
-    if (v <= 0) return Seq.empty
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val fromCommits = versions()
-      .filter(x => x > base.getOrElse(0L) && x <= v)
-      .reverseIterator
-      .flatMap(x => readCommit(x).partMetaJson)
-      .nextOption()
-    fromCommits.orElse(base.flatMap { cv =>
-      ckptLines(cv).collectFirst {
-        case l if l.startsWith("partmeta\t") => l.split("\t", 2)(1)
-      }
-    }).map(GraftTable.partMetaFromJson).getOrElse(Seq.empty)
-  }
+  private[graft] def partMetaAt(v: Long): Seq[GraftTable.PartMeta] =
+    metaAt(PartMetaRow, v)
 
   /** The recorded protocol feature set at `v` (Delta's protocol row):
     * monotone — the high-water mark of every feature any commit ≤ v
     * activated. Empty on legacy logs.
     */
-  def protocolAt(v: Long): Set[String] = {
-    if (v <= 0) return Set.empty
-    val base = checkpointVersions().filter(_ <= v).lastOption
-    val fromCommits = versions()
-      .filter(x => x > base.getOrElse(0L) && x <= v)
-      .reverseIterator
-      .flatMap(x => readCommit(x).protocolJson)
-      .nextOption()
-    fromCommits.orElse(base.flatMap { cv =>
-      ckptLines(cv).collectFirst {
-        case l if l.startsWith("protocol\t") => l.split("\t", 2)(1)
-      }
-    }).map(GraftTable.protocolFromJson).getOrElse(Set.empty)
-  }
+  def protocolAt(v: Long): Set[String] = metaAt(ProtocolRow, v)
 
   /** The reader features ACTIVE at version `v` — derived from actual
     * state, not the (monotone) protocol row: a purge that cleared the
@@ -1265,7 +1197,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
     */
   private def tagsAsOf(v: Long): collection.mutable.Set[String] = {
     val s0 = scala.collection.mutable.Set.empty[String]
-    val base = checkpointVersions().filter(_ <= v).lastOption.filter { cv =>
+    val (commits, ckpts) = listLog()
+    val base = ckpts.filter(_ <= v).lastOption.filter { cv =>
       val lines = ckptLines(cv)
       val ledgered = lines.headOption.exists(_.startsWith("graft-ckpt\t"))
       if (ledgered) lines.foreach { l =>
@@ -1273,7 +1206,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
       }
       ledgered
     }
-    versions().filter(x => x > base.getOrElse(0L) && x <= v).foreach { x =>
+    commits.filter(x => x > base.getOrElse(0L) && x <= v).foreach { x =>
       val a = readCommit(x).action
       if (a.contains("@")) s0 += a // append@<tag> / replace@<tag>
     }
@@ -1288,29 +1221,21 @@ class GraftTable private (val s: SparkSession, val root: String) {
       s0
     }
 
-  /** Checkpoint body at `v`: header, schema, the full live set (with
-    * stats) and the committed-tag ledger.
+  /** Row `r`'s encoded value at `v` when it is present — what a
+    * checkpoint records and what a commit carries forward. An empty
+    * value has no line: its absence already resolves to empty.
     */
-  private def checkpointBody(v: Long,
-                             extraTags: Iterable[String] = Nil)
-      : Array[Byte] = {
+  private def presentMetaAt[T](r: MetaRow[T], v: Long): Option[String] =
+    Some(metaAt(r, v)).filter(r.present).map(r.toJson)
+
+  /** Publish the checkpoint at `v` — header, the present metadata
+    * rows, the full live set (with stats) and the committed-tag
+    * ledger — and then its parquet sidecar.
+    */
+  private def checkpoint(v: Long, extraTags: Iterable[String] = Nil): Unit = {
     val b = new StringBuilder(s"graft-ckpt\t$v\n")
-    schemaAt(v).foreach(sc => b.append(s"schema\t${sc.json}\n"))
-    val cons = constraintsAt(v)
-    if (cons.nonEmpty)
-      b.append(s"constraints\t${GraftTable.constraintsToJson(cons)}\n")
-    val bIdx = bloomIndexAt(v)
-    if (bIdx.nonEmpty)
-      b.append(s"bloomidx\t${GraftTable.bloomIdxToJson(bIdx)}\n")
-    val cmV = colmapAt(v)
-    if (!cmV.isIdentity)
-      b.append(s"colmap\t${GraftTable.colmapToJson(cmV)}\n")
-    val pmk = partMetaAt(v)
-    if (pmk.nonEmpty)
-      b.append(s"partmeta\t${GraftTable.partMetaToJson(pmk)}\n")
-    val protoV = protocolAt(v)
-    if (protoV.nonEmpty)
-      b.append(s"protocol\t${GraftTable.protocolToJson(protoV)}\n")
+    MetaRows.foreach(r =>
+      presentMetaAt(r, v).foreach(j => b.append(s"${r.tag}\t$j\n")))
     val live = resolveMeta(v).toSeq.sortBy(_._1)
     live.foreach { case (p, m) =>
       b.append(s"file\t$p\t${m.bytes}${m.stats.map("\t" + _).getOrElse("")}\n")
@@ -1321,7 +1246,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     }
     (tagsAsOf(v) ++ extraTags).toSeq.distinct.sorted
       .foreach(t => b.append(s"tag\t$t\n"))
-    b.toString.getBytes(UTF_8)
+    if (publish(ckptPath(v), b.toString.getBytes(UTF_8))) writeCkptParquet(v)
   }
 
   /** Optimistic-concurrency commit loop. `removes` must still be live
@@ -1403,8 +1328,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
           val hard =
             if (!tolerateAppends) Seq((prev, "untracked"))
             else inter.collect {
-              case c if c.schemaJson.isDefined &&
-                  c.schemaJson != baseSchemaJson =>
+              case c if c.meta.get(SchemaRow.tag)
+                  .exists(j => !baseSchemaJson.contains(j)) =>
                 (c.version, s"${c.action}(schema-changed)")
               case c if !c.action.startsWith("append") &&
                   !fileScoped(c.action) =>
@@ -1444,24 +1369,12 @@ class GraftTable private (val s: SparkSession, val root: String) {
           s"$action conflicts: files no longer live: ${gone.take(3).mkString(",")}")
       }
       val v = prev + 1
-      // `reschema` re-derives the post-commit schema against the
-      // CURRENT predecessor on every retry of the race loop (see
-      // append): a fixed `schema` computed before the loop can go
-      // stale when a concurrent schema-evolving commit wins a version
-      val sch = reschema.map(f => f(prev)).map(Some(_))
-        .getOrElse(schema.orElse(if (prev > 0) schemaAt(prev) else None))
-      val cons = constraints
-        .getOrElse(if (prev > 0) constraintsAt(prev) else Seq.empty)
-      val bIdx = bloomIdx
-        .getOrElse(if (prev > 0) bloomIndexAt(prev) else Seq.empty)
-      val cm = colmap
-        .getOrElse(if (prev > 0) colmapAt(prev) else GraftTable.ColMap.empty)
-      val pm =
-        if (clearPartMeta) partMeta // an epoch change (flat overwrite,
-        // restore to a pre-partitioned version): the caller's value —
-        // possibly none — REPLACES the carried row
-        else partMeta.orElse(
-          if (prev > 0) Some(partMetaAt(prev)).filter(_.nonEmpty) else None)
+      val cm = colmap.getOrElse(colmapAt(prev))
+      // an epoch change (`clearPartMeta`: flat overwrite, restore to a
+      // pre-partitioned version): the caller's value — possibly none —
+      // REPLACES the carried row
+      val pm = partMeta.getOrElse(
+        if (clearPartMeta) Seq.empty else partMetaAt(prev))
       // the protocol row is MONOTONE: the predecessor's features plus
       // whatever this commit activates (Delta's protocol discipline —
       // a feature, once required, stays recorded even if later state
@@ -1470,13 +1383,12 @@ class GraftTable private (val s: SparkSession, val root: String) {
       // DROP FEATURE verb, which has already checked inactivity; the
       // implied-features union below still re-adds anything this very
       // commit activates, so a drop can never race a re-activation.
-      val proto = protocolOverride.getOrElse(
-        if (prev > 0) protocolAt(prev) else Set.empty[String]) ++
+      val proto = protocolOverride.getOrElse(protocolAt(prev)) ++
         (if (dvs.nonEmpty) Set(GraftTable.Features.DeletionVectors)
          else Set.empty) ++
         (if (!cm.isIdentity) Set(GraftTable.Features.ColumnMapping)
          else Set.empty) ++
-        (if (pm.exists(_.exists(_.tpe == StringType)))
+        (if (pm.exists(_.tpe == StringType))
           Set(GraftTable.Features.StringPartitionValues)
          else Set.empty) ++
         (if (info.isDefined) Set(GraftTable.Features.CommitInfo)
@@ -1503,26 +1415,31 @@ class GraftTable private (val s: SparkSession, val root: String) {
         require(!i.contains('\t') && !i.contains('\n'), s"bad info: $i")
         body.append(s"info\t$i\n")
       }
-      sch.foreach(sc => body.append(s"schema\t${sc.json}\n"))
-      if (cons.nonEmpty || constraints.isDefined)
-        body.append(
-          s"constraints\t${GraftTable.constraintsToJson(cons)}\n")
-      if (bIdx.nonEmpty || bloomIdx.isDefined)
-        body.append(s"bloomidx\t${GraftTable.bloomIdxToJson(bIdx)}\n")
-      if (!cm.isIdentity || colmap.isDefined)
-        body.append(s"colmap\t${GraftTable.colmapToJson(cm)}\n")
-      pm match {
-        case Some(p) =>
-          body.append(s"partmeta\t${GraftTable.partMetaToJson(p)}\n")
-        case None if clearPartMeta =>
-          body.append(s"partmeta\t${GraftTable.PartMetaTombstone}\n")
-        case None => ()
+      // the metadata rows this commit SETS, encoded; every other row
+      // carries forward from the predecessor. A set row is written
+      // even when it is EMPTY — "no line" means carry-forward to the
+      // resolution, and a row dropped to empty would otherwise
+      // resurrect. `reschema` re-derives the post-commit schema
+      // against the CURRENT predecessor on every retry of the race
+      // loop (see append): a fixed `schema` computed before the loop
+      // can go stale when a concurrent schema-evolving commit wins a
+      // version.
+      val set = Seq(
+        SchemaRow.tag -> reschema.map(f => f(prev)).orElse(schema).map(_.json),
+        ConstraintsRow.tag -> constraints.map(ConstraintsRow.toJson),
+        BloomIdxRow.tag -> bloomIdx.map(BloomIdxRow.toJson),
+        ColMapRow.tag -> colmap.map(ColMapRow.toJson),
+        PartMetaRow.tag -> (if (clearPartMeta)
+          Some(partMeta.fold(PartMetaTombstone)(PartMetaRow.toJson))
+          else partMeta.map(PartMetaRow.toJson)),
+        // the protocol may also have grown by the features implied above
+        ProtocolRow.tag -> Some(ProtocolRow.toJson(proto))
+          .filter(_ => proto.nonEmpty || protocolOverride.isDefined))
+        .collect { case (tag, Some(j)) => tag -> j }.toMap
+      MetaRows.foreach { r =>
+        set.get(r.tag).orElse(presentMetaAt(r, prev))
+          .foreach(j => body.append(s"${r.tag}\t$j\n"))
       }
-      // an explicit override must be written even when it shrinks to
-      // EMPTY — "no line" means carry-forward to the resolution, and
-      // a dropped-to-empty row would otherwise resurrect
-      if (proto.nonEmpty || protocolOverride.isDefined)
-        body.append(s"protocol\t${GraftTable.protocolToJson(proto)}\n")
       adds.foreach { case (p, b) =>
         body.append(s"add\t$p\t$b${stats.get(p).map("\t" + _).getOrElse("")}\n")
       }
@@ -1532,9 +1449,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
         body.append(s"dv\t$p\t${d.path}\t${d.bytes}\t${d.nDeleted}\n")
       }
       if (publish(commitPath(v), body.toString.getBytes(UTF_8))) {
-        if (v % CheckpointEvery == 0) {
-          if (publish(ckptPath(v), checkpointBody(v))) writeCkptParquet(v)
-        }
+        if (v % CheckpointEvery == 0) checkpoint(v)
         return v
       }
       attempt += 1 // lost the race — re-resolve and try the next version
@@ -2783,17 +2698,15 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // parallel files; rewriting megabytes of positions through fewer
     // tasks would buy back only footers. The rewrite, when it
     // happens, is sidecar-sized — positions only, never data.
-    def sidecarFiles(sub: String) = fs.listStatus(new Path(rootPath, sub))
-      .toSeq.filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-    val files0 = sidecarFiles(dvSub)
-    val bytes0 = files0.map(_.getLen).sum
+    val files0 = listStaged(dvSub)
+    val bytes0 = files0.map(_._2).sum
     val dvSubC =
       if (files0.size > 1 && bytes0 / files0.size < 512 * 1024) {
         val sub = stageDv(readDv(Seq(dvSub)),
           math.max(1L, bytes0 / (4L << 20)).toInt)
         drop(dvSub); sub
       } else dvSub
-    val dvBytes = sidecarFiles(dvSubC).map(_.getLen).sum
+    val dvBytes = listStaged(dvSubC).map(_._2).sum
     val (fullDead, partial) = touched.partition { p =>
       live(p).stats.flatMap(FileStats.numRows)
         .contains(counts(fileKey(p)))
@@ -3733,9 +3646,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
   private def stageCdf(images: DataFrame): Seq[(String, Long)] = {
     val sub = s"$CdfDir/${java.util.UUID.randomUUID.toString.take(12)}"
     images.write.parquet(s"$root/$sub")
-    fs.listStatus(new Path(rootPath, sub)).toSeq
-      .filter(f => f.isFile && f.getPath.getName.endsWith(".parquet"))
-      .map(f => (s"$sub/${f.getPath.getName}", f.getLen))
+    listStaged(sub)
   }
 
   /** OPTIMIZE: rewrite undersized live files (< targetBytes/2) into
@@ -4183,9 +4094,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
         val files = c.adds.map(_.path).sorted
         if (files.isEmpty) None
         else {
-          val base = c.schemaJson match {
-            case Some(j) => s.read
-              .schema(DataType.fromJson(j).asInstanceOf[StructType])
+          val base = c.meta.get(SchemaRow.tag).flatMap(SchemaRow.fromJson) match {
+            case Some(sc) => s.read.schema(sc)
               .parquet(files.map(f => s"$root/$f"): _*)
             case None => s.read.parquet(files.map(f => s"$root/$f"): _*)
           }
@@ -4401,8 +4311,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     // ledger forward) and vacuum both preserve it.
     val srcTags = tagsAsOf(v)
     if (srcTags.nonEmpty) {
-      if (dest.publish(dest.ckptPath(1L), dest.checkpointBody(1L, srcTags)))
-        dest.writeCkptParquet(1L)
+      dest.checkpoint(1L, srcTags)
       dest.tagCache = None // rebuilt from the seeded ledger on next read
       ()
     }
@@ -4555,10 +4464,8 @@ class GraftTable private (val s: SparkSession, val root: String) {
     if (versions().isEmpty) return // nothing committed: nothing to reclaim
     // checkpoint the horizon so resolution (and the tag ledger) never
     // needs dropped entries
-    if (plan.horizon > 0 && !fs.exists(ckptPath(plan.horizon))) {
-      if (publish(ckptPath(plan.horizon), checkpointBody(plan.horizon)))
-        writeCkptParquet(plan.horizon)
-    }
+    if (plan.horizon > 0 && !fs.exists(ckptPath(plan.horizon)))
+      checkpoint(plan.horizon)
     plan.files.foreach { case (rel, _) =>
       fs.delete(new Path(rootPath, rel), false) }
     plan.commits.foreach(v => fs.delete(commitPath(v), false))
@@ -4582,7 +4489,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
   def vacuumPlan(retainVersions: Int = 2,
                  orphanGraceMillis: Long = 10L * 60 * 1000)
       : GraftTable.VacuumPlan = {
-    val vs = versions()
+    val (vs, ckpts) = listLog()
     if (vs.isEmpty)
       return GraftTable.VacuumPlan(0L, Seq.empty, Seq.empty, Seq.empty)
     val keep = vs.takeRight(math.max(1, retainVersions))
@@ -4620,7 +4527,7 @@ class GraftTable private (val s: SparkSession, val root: String) {
     if (fs.exists(dvRoot)) sweep(dvRoot, DvDir,
       r => referencedDv.exists(d => r.startsWith(d + "/")))
     GraftTable.VacuumPlan(horizon, out.result().sorted,
-      vs.filter(_ < horizon), checkpointVersions().filter(_ < horizon))
+      vs.filter(_ < horizon), ckpts.filter(_ < horizon))
   }
 }
 
@@ -4698,6 +4605,39 @@ object GraftTable {
 
   private[graft] case class FileMeta(bytes: Long, stats: Option[String],
                                      dv: Option[DvRef] = None)
+
+  /** One kind of carried METADATA ROW of the log (Delta's metaData /
+    * protocol actions): a commit line `tag \t json`. A commit writes
+    * the row when it sets it, or when the value it carries forward is
+    * `present`; a checkpoint writes the present rows only. A missing
+    * row resolves to `empty`.
+    */
+  private[sources] final case class MetaRow[T](tag: String,
+                                               toJson: T => String,
+                                               fromJson: String => T,
+                                               empty: T,
+                                               present: T => Boolean)
+
+  private[sources] val SchemaRow = MetaRow[Option[StructType]]("schema",
+    _.fold("")(_.json),
+    j => Some(DataType.fromJson(j).asInstanceOf[StructType]),
+    None, _.isDefined)
+  private[sources] val ConstraintsRow = MetaRow[Seq[(String, String)]](
+    "constraints", constraintsToJson, constraintsFromJson,
+    Seq.empty, _.nonEmpty)
+  private[sources] val BloomIdxRow = MetaRow[Seq[(String, Long)]]("bloomidx",
+    bloomIdxToJson, bloomIdxFromJson, Seq.empty, _.nonEmpty)
+  private[sources] val ColMapRow = MetaRow[ColMap]("colmap",
+    colmapToJson, colmapFromJson, ColMap.empty, !_.isIdentity)
+  private[sources] val PartMetaRow = MetaRow[Seq[PartMeta]]("partmeta",
+    partMetaToJson, partMetaFromJson, Seq.empty, _.nonEmpty)
+  private[sources] val ProtocolRow = MetaRow[Set[String]]("protocol",
+    protocolToJson, protocolFromJson, Set.empty, _.nonEmpty)
+
+  /** The metadata rows, in the order commits and checkpoints write them. */
+  private[sources] val MetaRows: Seq[MetaRow[_]] = Seq(SchemaRow,
+    ConstraintsRow, BloomIdxRow, ColMapRow, PartMetaRow, ProtocolRow)
+  private val MetaTags: Set[String] = MetaRows.map(_.tag).toSet
 
   private val consMapper = new com.fasterxml.jackson.databind.ObjectMapper()
 

@@ -330,4 +330,74 @@ class CodegenSpec extends SparkSpec {
       }
     }
   }
+
+  test("cosine_sim, minhash_sig_long, simhash64, long_dot and the other scalar expressions: generated code equals eval, no fallback") {
+    import spark.implicits._
+    // every shape the expressions branch on: empty and single-token
+    // lists, repeated shingles, escaped and multi-byte paths, zero and
+    // mismatched vectors, disjoint and overlapping sorted sets, nulls.
+    // The repartition keeps the optimizer from folding the projection
+    // over the local rows on the driver, which would skip codegen
+    val in = Seq(
+      (0L, Some(Seq("the", "quick", "brown", "fox", "jumps", "over")),
+        Some("country=South%3A1"), Some(Seq(1f, 2f, 3f)),
+        Some(Seq(0.5f, -1f, 2f)), Some(Seq(1L, 5L, 9L)),
+        Some(Seq(2L, 5L, 9L, 12L))),
+      (1L, Some(Seq("a", "b")), Some("plain"), Some(Seq(0f, 0f)),
+        Some(Seq(1f, 1f)), Some(Seq.empty[Long]), Some(Seq(3L))),
+      (2L, Some(Seq.empty[String]), Some("a%2Fb%25c"), Some(Seq(1f)),
+        Some(Seq(1f, 0f)), Some(Seq(-4L, 7L)), Some(Seq(-4L, 7L))),
+      (3L, Some(Seq("x", "y", "z", "x", "y", "z", "x")), Some("日本%20語"),
+        Some(Seq(3.5f, -2.25f)), Some(Seq(-1f, 4f)),
+        Some(Seq(Long.MinValue, 0L, 3L)), Some(Seq(0L, 1L, 2L, 3L))),
+      (4L, None, None, None, None, None, None))
+      .toDF("id", "toks", "path", "e1", "e2", "q1", "q2").repartition(2)
+    // a fresh plan per run: the factory mode is read when it executes
+    def out = in.select(col("id"),
+      expr("rolling_hash(path)").as("rh"), // the SQL surface too
+      GraftFunctions.path_unescape(col("path")).as("pu"),
+      GraftFunctions.cosine_sim(col("e1"), col("e2")).as("cos"),
+      GraftFunctions.shingle_hashes(col("toks"), 2).as("sh"),
+      GraftFunctions.shingle_hashes_pos(col("toks"), 2).as("shp"),
+      GraftFunctions.minhash_sig(col("toks"), 8).as("mh"),
+      GraftFunctions.minhash_sig_long(
+        GraftFunctions.shingle_hashes(col("toks"), 2), 8).as("mhl"),
+      GraftFunctions.simhash64(col("toks")).as("simh"),
+      GraftFunctions.long_dot(col("q1"), col("q1")).as("ld"),
+      GraftFunctions.sorted_intersect_count(col("q1"), col("q2"),
+        lit(0L)).as("sic"),
+      GraftFunctions.sorted_intersect_count(col("q1"), col("q2"),
+        lit(3L)).as("sic3"))
+    def run(confs: (String, String)*) = {
+      val prev = confs.map { case (k, _) => k -> spark.conf.getOption(k) }
+      confs.foreach { case (k, v) => spark.conf.set(k, v) }
+      try {
+        val df = out
+        val rows = df.collect().map(r => r.getLong(0) -> r.toSeq.tail).toMap
+        (rows, df.queryExecution.executedPlan)
+      } finally prev.foreach {
+        case (k, Some(v)) => spark.conf.set(k, v)
+        case (k, None) => spark.conf.unset(k)
+      }
+    }
+    // a doGenCode bug fails loudly (no interpreted fallback) or
+    // diverges from the interpreted eval below
+    val (generated, plan) = run(
+      "spark.sql.codegen.factoryMode" -> "CODEGEN_ONLY",
+      "spark.sql.codegen.fallback" -> "false")
+    val (interpreted, _) = run(
+      "spark.sql.codegen.factoryMode" -> "NO_CODEGEN",
+      "spark.sql.codegen.wholeStage" -> "false")
+    // the helper walks into the adaptive plan's final stages
+    val aqe = new org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper {}
+    assert(aqe.find(plan)(_.isInstanceOf[
+      org.apache.spark.sql.execution.WholeStageCodegenExec]).isDefined,
+      "the projection did not run as generated code")
+    assert(generated.keySet == (0L to 4L).toSet)
+    assert(generated(0L).forall(_ != null), "row 0 must exercise every expression")
+    assert(generated(4L).forall(_ == null), "null inputs give null")
+    generated.foreach { case (id, g) =>
+      assert(g == interpreted(id), s"row $id: generated $g != eval ${interpreted(id)}")
+    }
+  }
 }
